@@ -26,6 +26,7 @@ from datapact_spark import aggregate as agg
 from datapact_spark.config import DataPactConfig, ValidationTask
 from datapact_spark.ledger import LEDGER_SCHEMA, ResultsLedger
 from datapact_spark.plans.compiler import compile_task
+from datapact_spark.session import cache_scope
 from datapact_spark.sources.loader import TableResolver
 
 log = logging.getLogger("datapact_spark")
@@ -81,11 +82,13 @@ class DataPactEngine:
         self.baselines = BaselineStore(spark, results_path)
 
     # ------------------------------------------------------------ plan
+    @cache_scope()
     def plan(self, config: DataPactConfig) -> dict[str, str]:
         """`datapact plan` parity (main.py:167-174): compile every task
         and return its physical plan text without executing.  Tasks with
         ``partition_by`` additionally show the per-partition verdict
-        plan — the one that actually runs in partitioned mode."""
+        plan — the one that actually runs in partitioned mode. Runs in a
+        ``cache_scope``, so compile-time persists never outlive it."""
 
         def fmt(df) -> str:
             return df._jdf.queryExecution().explainString(
@@ -122,6 +125,9 @@ class DataPactEngine:
         result = RunResult(run_id=run_id, job_name=job_name)
         parallelism = max_parallel or config.max_parallel_tasks
 
+        # each task is a cache scope on its pool thread: whatever it
+        # persists is released when it finishes, and never a sibling's
+        @cache_scope()
         def _run_one(task: ValidationTask) -> tuple[TaskOutcome, Row | None]:
             # FAIR-pool isolation per task; local properties are
             # thread-confined so this tags only this task's jobs.
@@ -285,6 +291,7 @@ class DataPactEngine:
         return Row(**d)
 
     # ------------------------------------------- per-partition verdicts
+    @cache_scope()
     def run_partitioned(
         self,
         task: ValidationTask,
@@ -307,6 +314,10 @@ class DataPactEngine:
         directory then gets its own commit marker; a killed run resumes
         by recomputing only unmarked buckets (idempotent dynamic
         overwrite replaces exactly those directories).
+
+        Runs in its own ``cache_scope``: the compiler's persists are
+        released once the verdicts are written; the returned frame reads
+        the checkpoint.
         """
         from datapact_spark.ledger import CheckpointStore
         from datapact_spark.plans.partitioned import compile_partition_verdicts
@@ -341,14 +352,6 @@ class DataPactEngine:
             store.write_batches(task.task_key, run_id, out)
             for b in missing:
                 store.finalize_batch(task.task_key, run_id, b, verdicts.schema)
-        # compile_partition_verdicts caches the joined-profile relation
-        # when constraint/freshness folds are present (see the persist
-        # note there); release it now that the verdicts are written so
-        # a long-lived session running many tasks doesn't accumulate
-        # verdict-sized cache entries
-        cached = getattr(verdicts, "_datapact_cached", None)
-        if cached is not None:
-            cached.unpersist()
         return store.read_verdicts(task.task_key, run_id)
 
     def _refresh_exec_tables(self, run_id: int) -> None:

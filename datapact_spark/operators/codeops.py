@@ -725,20 +725,17 @@ def near_clone_pairs(
     (byte-identical subtrees → AQE ReusedExchange, the r4 ANN lesson).
     Files with < ``min_fingerprints`` surviving fingerprints are
     excluded — too short for a meaningful overlap ratio. The persisted
-    relation rides the returned frame's ``_datapact_cached`` handle —
-    ``session.release_cached(out)`` after materializing."""
-    from pyspark.storagelevel import StorageLevel
-
+    relation lives until the caller's ``cache_scope`` exits."""
     from datapact_spark.operators.dedup import cap_bucket_size
-    from datapact_spark.session import track_cached
+    from datapact_spark.session import persist
 
     # vectorized=True (default): Python-worker fingerprint twin —
     # bit-identical (unit-tested), ~2× the interpreted-HOF Column path
     fp_fn = code_fingerprints_vectorized if vectorized else code_fingerprints
-    fps = fp_fn(
+    fps = persist(fp_fn(
         df, k=k, mod=mod, repo_col=repo_col, path_col=path_col,
         content_col=content_col,
-    ).select("file_key", "fp").persist(StorageLevel.MEMORY_AND_DISK)
+    ).select("file_key", "fp"))
     capped = cap_bucket_size(fps, ["fp"], max_bucket_size)
     counts = capped.groupBy("file_key").agg(
         F.count(F.lit(1)).alias("n_fps")
@@ -759,7 +756,7 @@ def near_clone_pairs(
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
         .where(F.col("shared_fps") >= min_shared)
     )
-    out = pairs.select(
+    return pairs.select(
         "file_a",
         "file_b",
         "shared_fps",
@@ -770,4 +767,3 @@ def near_clone_pairs(
             / F.least("fps_a", "fps_b").cast("double")
         ).alias("similarity"),
     ).where(F.col("similarity") >= threshold)
-    return track_cached(out, fps)

@@ -106,27 +106,24 @@ def exact_duplicates(
     duplicate document (keeper = min id per group), columns
     (fingerprint, keep_id, dup_id)."""
     from datapact_spark.operators.textops import doc_fingerprint
-    from datapact_spark.session import track_cached
-    from pyspark.storagelevel import StorageLevel
+    from datapact_spark.session import persist
 
     # Persist the compact (id, fingerprint) proxy: the keepers
     # aggregate and the probe side are two consumers, and without the
     # persist each re-runs the full text scan + normalize + md5 (the
     # dominant cost — plan-verified doubled scans at r7). The cached
     # rows are ~50 B/doc (guide-§8 lightweight-proxy shape), orders of
-    # magnitude under the text they replace at any scale. The handle
-    # rides ``_datapact_cached`` — callers release after materializing.
-    fp = (
+    # magnitude under the text they replace at any scale. The persist
+    # lives until the caller's ``cache_scope`` exits.
+    fp = persist(
         doc_fingerprint(df.select(id_col, text_col), text_col)
         .select(F.col(id_col).alias("dup_id"), "fingerprint")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     keepers = fp.groupBy("fingerprint").agg(F.min("dup_id").alias("keep_id"))
-    return track_cached(
+    return (
         fp.join(keepers, "fingerprint")
         .where(F.col("dup_id") != F.col("keep_id"))
-        .select("fingerprint", "keep_id", "dup_id"),
-        fp,
+        .select("fingerprint", "keep_id", "dup_id")
     )
 
 
@@ -938,13 +935,12 @@ def doc_duplication_score(
             "__shared", F.col("__n_docs") >= min_docs
         )
     elif carrier_strategy == "join":
-        from pyspark.storagelevel import StorageLevel
+        from datapact_spark.session import persist
 
         # Rows of gi are distinct (gram, doc) pairs, so count == the
-        # carrier-doc count. The persist rides the returned frame's
-        # _datapact_cached handle — release with
-        # session.release_cached(out) after materializing.
-        gi = gi.persist(StorageLevel.MEMORY_AND_DISK)
+        # carrier-doc count. The persist lives until the caller's
+        # ``cache_scope`` exits.
+        gi = persist(gi)
         rep = (
             gi.groupBy("gram_hash")
             .agg(F.count(F.lit(1)).alias("__n_docs"))
@@ -966,7 +962,7 @@ def doc_duplication_score(
             f"carrier_strategy must be 'join' or 'window', got {carrier_strategy!r}"
         )
 
-    out = scored.groupBy("id").agg(
+    return scored.groupBy("id").agg(
         F.sum("__occ").alias("n_grams"),
         F.sum(
             F.when(F.col("__shared"), F.col("__occ")).otherwise(0)
@@ -979,11 +975,6 @@ def doc_duplication_score(
             "dup_score"
         ),
     )
-    if carrier_strategy == "join":
-        from datapact_spark.session import track_cached
-
-        out = track_cached(out, gi)
-    return out
 
 
 def contamination_check(
@@ -1093,10 +1084,11 @@ def dup_clusters(
     Raises if ``max_iterations`` rounds do not converge (pathological
     diameter — raise the cap). The RETURNED frame stays persisted (its
     lineage is the whole iteration chain; unpersisting would re-run
-    every round per downstream action) and carries itself on the
-    ``_datapact_cached`` handle — ``session.release_cached(out)`` (or
-    ``out.unpersist()``) when done."""
+    every round per downstream action) until the caller's
+    ``cache_scope`` exits."""
     from pyspark.storagelevel import StorageLevel
+
+    from datapact_spark.session import persist
 
     checkpoint_every = 5
 
@@ -1148,7 +1140,8 @@ def dup_clusters(
             # of the pre-checkpoint plan
             updated_full = updated_full.localCheckpoint(eager=True)
         else:
-            updated_full = updated_full.persist(StorageLevel.MEMORY_AND_DISK)
+            # registered: the converged round is the returned frame
+            updated_full = persist(updated_full)
         changed = updated_full.where(
             F.col("cluster_id") != F.col("__prev")
         ).count()
@@ -1157,9 +1150,7 @@ def dup_clusters(
         labels = updated_full.select("id", "cluster_id")
         if changed == 0:
             edges.unpersist()
-            from datapact_spark.session import track_cached
-
-            return track_cached(labels, labels_cached)
+            return labels
     edges.unpersist()
     labels_cached.unpersist()
     raise RuntimeError(
@@ -1246,8 +1237,7 @@ def strip_boilerplate(
     sort_array(collect_list(struct(idx, line))). The rebuild shuffles
     (id, line) pairs once; no window over the skewed line key.
     """
-    from pyspark.storagelevel import StorageLevel
-    from datapact_spark.session import track_cached
+    from datapact_spark.session import persist
 
     if boiler is None:
         boiler = boilerplate_lines(df, id_col, text_col, min_docs)
@@ -1258,9 +1248,8 @@ def strip_boilerplate(
     # for the anti-join. Past the cap, AQE keeps the shuffled join.
     # The persist keeps the boiler derivation single-pass (the count
     # would otherwise recompute the full line aggregation the join
-    # needs again); the handle rides ``_datapact_cached``.
-    hashes = boiler.select("line_hash").persist(StorageLevel.MEMORY_AND_DISK)
-    hashes_cached = hashes
+    # needs again); it lives until the caller's ``cache_scope`` exits.
+    hashes = persist(boiler.select("line_hash"))
     if hashes.count() <= 2_000_000:
         hashes = F.broadcast(hashes)
     lines = df.select(
@@ -1293,17 +1282,12 @@ def strip_boilerplate(
             F.size(F.split(F.col(text_col), "\n", -1)).cast("long"),
         ).alias("n_lines"),
     )
-    return track_cached(
-        totals
-        .join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            "n_lines",
-            (F.col("n_lines") - F.coalesce("__kept", F.lit(0))).alias("n_boiler"),
-            F.when(
-                F.col("n_lines").isNotNull(),
-                F.coalesce("cleaned_text", F.lit("")),
-            ).alias("cleaned_text"),
-        ),
-        hashes_cached,
+    return totals.join(rebuilt, id_col, "left").select(
+        id_col,
+        "n_lines",
+        (F.col("n_lines") - F.coalesce("__kept", F.lit(0))).alias("n_boiler"),
+        F.when(
+            F.col("n_lines").isNotNull(),
+            F.coalesce("cleaned_text", F.lit("")),
+        ).alias("cleaned_text"),
     )

@@ -4,13 +4,19 @@ AQE (runtime re-planning, skew-join splitting, partition coalescing) and
 Arrow-batched Python UDF transfer are on by default — these are the
 settings the engine assumes at 100 TB scale and they are equally correct
 on local[N].
+
+Cache lifetime is a scope: ``persist`` registers a relation on the
+current thread and the enclosing ``cache_scope`` unpersists it on exit.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -60,38 +66,53 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def track_cached(out, *cached):
-    """Attach mid-plan persisted relations to the DataFrame that
-    consumes them, so the caller that MATERIALIZES the result can
-    release them (``release_cached``) instead of pinning executor
-    storage for the whole session — the leak class behind the r4
-    ``dup_clusters`` bug. The handle rides the same ``_datapact_cached``
-    attribute the partitioned-verdict engine hands off."""
-    existing = list(getattr(out, "_datapact_cached", None) or [])
-    out._datapact_cached = existing + list(cached)
-    return out
+class _Registry(threading.local):
+    """Per-thread list of the frames ``persist`` registered."""
+
+    def __init__(self) -> None:
+        self.cached: list[DataFrame] = []
 
 
-def release_cached(df) -> int:
-    """Unpersist every relation ``track_cached`` attached to ``df``.
-    Call AFTER materializing (collect / write); returns how many
-    relations were released. Safe on DataFrames with no handle."""
-    cached = getattr(df, "_datapact_cached", None) or []
-    if not isinstance(cached, list):
-        cached = [cached]
-    for c in cached:
-        c.unpersist()
-    df._datapact_cached = []
-    return len(cached)
+_registry = _Registry()
 
 
-def propagate_cached(src, dst):
-    """Move the ``_datapact_cached`` handle from ``src`` onto ``dst`` —
-    use when a wrapper derives a new DataFrame (select/alias/orderBy)
-    from a handle-carrying one, which would otherwise orphan the
-    persisted relations."""
-    cached = getattr(src, "_datapact_cached", None) or []
-    if not isinstance(cached, list):
-        # a bare DataFrame handle would star-unpack into its Columns
-        cached = [cached]
-    return track_cached(dst, *cached)
+def _release_from(mark: int) -> int:
+    reg = _registry.cached
+    dropped = reg[mark:]
+    del reg[mark:]
+    for df in reversed(dropped):
+        df.unpersist()
+    return len(dropped)
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK: spills rather than recomputes)
+    and register it on the current thread, so the innermost enclosing
+    ``cache_scope`` releases it on exit. Operators persist a relation
+    their returned plan still reads this way; the cache then lives
+    exactly as long as the caller's scope."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _registry.cached.append(df)
+    return df
+
+
+@contextmanager
+def cache_scope():
+    """Unpersist, on exit, every relation this thread registered with
+    ``persist`` since the scope was entered. Scopes nest, and a scope
+    never touches another thread's registrations — the engine runs
+    tasks concurrently in one session, so a session-wide
+    ``clearCache`` would drop a sibling task's live cache."""
+    mark = len(_registry.cached)
+    try:
+        yield
+    finally:
+        _release_from(mark)
+
+
+def release_cached(_df=None) -> int:
+    """Unpersist everything the current thread registered with
+    ``persist`` and return how many relations that was. For callers
+    that materialize outside any ``cache_scope``; the argument is
+    accepted and ignored."""
+    return _release_from(0)

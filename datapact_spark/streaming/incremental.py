@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from datapact_spark.config import ValidationTask
 from datapact_spark.plans.compiler import compile_task
+from datapact_spark.session import cache_scope, persist
 from datapact_spark.sources.loader import TableResolver
 
 
@@ -231,8 +232,9 @@ def streaming_near_dedup(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df = batch_df.persist()
-        try:
+        # every persist below is released when the batch ends
+        with cache_scope():
+            batch_df = persist(batch_df)
             if batch_df.isEmpty():
                 return
             # the verify corpus must include previously-ADMITTED stream
@@ -258,7 +260,7 @@ def streaming_near_dedup(
             # accepted partition (the embedding gate is safe only
             # because brute_force_topk filters neighbor_id != query_id)
             ).where(F.col("new_id") != F.col("corpus_id"))
-            best = (
+            best = persist(
                 hits.groupBy("new_id")
                 .agg(
                     F.max(F.struct(F.col("jaccard"), F.col("corpus_id"))).alias("m")
@@ -268,47 +270,42 @@ def streaming_near_dedup(
                     F.col("m.corpus_id").alias("matched_corpus_id"),
                     F.col("m.jaccard").alias("jaccard"),
                 )
-            ).persist()
-            try:
-                rejected = batch_df.join(F.broadcast(best), id_col)
-                accepted = batch_df.join(F.broadcast(best), id_col, "left_anti")
-                # intra-batch near-dups: both sides are novel vs the
-                # corpus, so the probe admits both — run the batch-local
-                # pair detector and greedily keep the min id of each pair
-                intra = minhash_dedup(
-                    accepted, id_col=id_col, text_col=text_col,
-                    num_hashes=num_hashes, bands=bands,
-                    shingle_n=shingle_n, seed=seed, threshold=threshold,
-                ).select(F.col("id_b").alias(id_col)).dropDuplicates()
-                accepted = accepted.join(F.broadcast(intra), id_col, "left_anti")
-                accepted = accepted.persist()
-                accepted.write.mode("overwrite").parquet(
-                    os.path.join(accepted_sink, f"batch={batch_id}")
+            )
+            rejected = batch_df.join(F.broadcast(best), id_col)
+            accepted = batch_df.join(F.broadcast(best), id_col, "left_anti")
+            # intra-batch near-dups: both sides are novel vs the
+            # corpus, so the probe admits both — run the batch-local
+            # pair detector and greedily keep the min id of each pair
+            intra = minhash_dedup(
+                accepted, id_col=id_col, text_col=text_col,
+                num_hashes=num_hashes, bands=bands,
+                shingle_n=shingle_n, seed=seed, threshold=threshold,
+            ).select(F.col("id_b").alias(id_col)).dropDuplicates()
+            accepted = persist(
+                accepted.join(F.broadcast(intra), id_col, "left_anti")
+            )
+            accepted.write.mode("overwrite").parquet(
+                os.path.join(accepted_sink, f"batch={batch_id}")
+            )
+            if rejected_sink is not None:
+                rejected.write.mode("overwrite").parquet(
+                    os.path.join(rejected_sink, f"batch={batch_id}")
                 )
-                if rejected_sink is not None:
-                    rejected.write.mode("overwrite").parquet(
-                        os.path.join(rejected_sink, f"batch={batch_id}")
-                    )
-                if admit_to_index:
-                    sigs = minhash_signatures(
-                        accepted, id_col, text_col, num_hashes, shingle_n, seed
-                    )
-                    # ingest_key = <checkpoint-digest>_<batch id>: a
-                    # checkpoint REPLAY of this batch overwrites its own
-                    # increment (idempotent), while a RESTART with a
-                    # fresh checkpoint dir — whose batch ids begin at 0
-                    # again — gets its own namespace instead of silently
-                    # clobbering a prior run's admitted band rows
-                    index_store.append(
-                        index_name,
-                        minhash_band_hashes(sigs, bands, num_hashes // bands),
-                        ingest_key=f"{_ck_tag(checkpoint_dir)}_{batch_id}",
-                    )
-                accepted.unpersist()
-            finally:
-                best.unpersist()
-        finally:
-            batch_df.unpersist()
+            if admit_to_index:
+                sigs = minhash_signatures(
+                    accepted, id_col, text_col, num_hashes, shingle_n, seed
+                )
+                # ingest_key = <checkpoint-digest>_<batch id>: a
+                # checkpoint REPLAY of this batch overwrites its own
+                # increment (idempotent), while a RESTART with a
+                # fresh checkpoint dir — whose batch ids begin at 0
+                # again — gets its own namespace instead of silently
+                # clobbering a prior run's admitted band rows
+                index_store.append(
+                    index_name,
+                    minhash_band_hashes(sigs, bands, num_hashes // bands),
+                    ingest_key=f"{_ck_tag(checkpoint_dir)}_{batch_id}",
+                )
 
     writer = stream_df.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -370,8 +367,10 @@ def streaming_embedding_dedup(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df = batch_df.persist()
-        try:
+        # per-batch persists end with the scope; the localCheckpoint
+        # accumulator is not registered and lives across batches
+        with cache_scope():
+            batch_df = persist(batch_df)
             if batch_df.isEmpty():
                 return
             if not state["seeded"]:
@@ -388,62 +387,56 @@ def streaming_embedding_dedup(
             hits = brute_force_topk(
                 ref, batch_df, k=1, id_col=id_col, vec_col=vec_col
             ).where(F.col("cosine_sim") >= threshold)
-            best = hits.select(
+            best = persist(hits.select(
                 F.col("query_id").alias(id_col),
                 F.col("neighbor_id").alias("matched_corpus_id"),
                 F.col("cosine_sim"),
-            ).persist()
-            try:
-                rejected = batch_df.join(F.broadcast(best), id_col)
-                accepted = batch_df.join(F.broadcast(best), id_col, "left_anti")
-                # intra-batch: self top-k over the accepted slice; a
-                # vector is dropped iff ANY lower-id neighbor sits over
-                # the threshold in its top-16 (k=1 would miss cluster
-                # members whose single nearest neighbor is a higher id)
-                intra = (
-                    brute_force_topk(
-                        accepted, accepted, k=16, id_col=id_col, vec_col=vec_col
-                    )
-                    .where(
-                        (F.col("cosine_sim") >= threshold)
-                        & (F.col("query_id") > F.col("neighbor_id"))
-                    )
-                    .select(F.col("query_id").alias(id_col))
-                    .dropDuplicates()
+            ))
+            rejected = batch_df.join(F.broadcast(best), id_col)
+            accepted = batch_df.join(F.broadcast(best), id_col, "left_anti")
+            # intra-batch: self top-k over the accepted slice; a
+            # vector is dropped iff ANY lower-id neighbor sits over
+            # the threshold in its top-16 (k=1 would miss cluster
+            # members whose single nearest neighbor is a higher id)
+            intra = (
+                brute_force_topk(
+                    accepted, accepted, k=16, id_col=id_col, vec_col=vec_col
                 )
-                accepted = accepted.join(
-                    F.broadcast(intra), id_col, "left_anti"
-                ).persist()
-                accepted.write.mode("overwrite").parquet(
-                    os.path.join(accepted_sink, f"batch={batch_id}")
+                .where(
+                    (F.col("cosine_sim") >= threshold)
+                    & (F.col("query_id") > F.col("neighbor_id"))
                 )
-                if rejected_sink is not None:
-                    rejected.write.mode("overwrite").parquet(
-                        os.path.join(rejected_sink, f"batch={batch_id}")
-                    )
-                # fold this batch's accepted slice into the accumulator.
-                # The slice is localCheckpoint'ed FIRST: its lineage
-                # contains ref = corpus ∪ acc_{b-1}, so an un-truncated
-                # union would nest the whole accumulator plan inside
-                # each new slice — exponential plan growth (OOMs inside
-                # ~10 batches); a checkpointed slice is a plain
-                # LogicalRDD and the union chain grows linearly instead.
-                sl = accepted.select(id_col, vec_col).localCheckpoint(
-                    eager=True
+                .select(F.col("query_id").alias(id_col))
+                .dropDuplicates()
+            )
+            accepted = persist(
+                accepted.join(F.broadcast(intra), id_col, "left_anti")
+            )
+            accepted.write.mode("overwrite").parquet(
+                os.path.join(accepted_sink, f"batch={batch_id}")
+            )
+            if rejected_sink is not None:
+                rejected.write.mode("overwrite").parquet(
+                    os.path.join(rejected_sink, f"batch={batch_id}")
                 )
-                state["acc"] = (
-                    sl if state["acc"] is None
-                    else state["acc"].unionByName(sl)
-                )
-                state["batches"] += 1
-                if state["batches"] % _ACC_COMPACT_EVERY == 0:
-                    # periodic compaction keeps the union chain short
-                    state["acc"] = state["acc"].localCheckpoint(eager=True)
-                accepted.unpersist()
-            finally:
-                best.unpersist()
-        finally:
-            batch_df.unpersist()
+            # fold this batch's accepted slice into the accumulator.
+            # The slice is localCheckpoint'ed FIRST: its lineage
+            # contains ref = corpus ∪ acc_{b-1}, so an un-truncated
+            # union would nest the whole accumulator plan inside
+            # each new slice — exponential plan growth (OOMs inside
+            # ~10 batches); a checkpointed slice is a plain
+            # LogicalRDD and the union chain grows linearly instead.
+            sl = accepted.select(id_col, vec_col).localCheckpoint(
+                eager=True
+            )
+            state["acc"] = (
+                sl if state["acc"] is None
+                else state["acc"].unionByName(sl)
+            )
+            state["batches"] += 1
+            if state["batches"] % _ACC_COMPACT_EVERY == 0:
+                # periodic compaction keeps the union chain short
+                state["acc"] = state["acc"].localCheckpoint(eager=True)
 
     writer = stream_df.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datapact_spark import aggregate as agg
-from datapact_spark.config import DataPactConfig, ValidationTask
+from datapact_spark.config import ConstraintCheck, DataPactConfig, ValidationTask
 from datapact_spark.engine import DataPactEngine
 from datapact_spark.sources.codegen import corrupt_code_table, synthesize_code_table
 from datapact_spark.sources.loader import TableResolver
@@ -75,6 +75,52 @@ def test_partition_by_identical_passes(engine):
     assert res.outcomes["self"].status == "SUCCESS"
     p = json.loads(res.outcomes["self"].payload)
     assert p["partition_verdicts"]["failed_groups"] == 0
+
+
+def _fingerprint_constraint_task() -> ValidationTask:
+    """Fingerprint row-hash mode plus a folded constraint: the shape for
+    which the verdict compiler persists its joined per-group profile."""
+    return ValidationTask(
+        task_key="fp_con", source="code_src", target="code_tgt",
+        primary_keys=["repo", "path"], partition_by=["repo", "lang"],
+        count_tolerance=0.0, pk_row_hash_check=True,
+        hash_columns=["content"], hash_algo="sha256",
+        row_hash_mode="fingerprint",
+        uniqueness_columns=["repo", "path"], uniqueness_tolerance=0.0,
+        constraint_checks=[
+            ConstraintCheck(name="content_present", predicate="length(content) > 0")
+        ],
+    )
+
+
+def _n_persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_fingerprint_constraint_task_runs_and_releases_cache(engine, spark):
+    """The partitioned verdicts of a fingerprint + constraint task must
+    fold into the payload (not crash into ERROR while releasing the
+    joined-profile persist), and the run must leave nothing pinned."""
+    before = _n_persistent_rdds(spark)
+    res = engine.run(
+        DataPactConfig(validations=[_fingerprint_constraint_task()]),
+        job_name="fp", run_id=91,
+    )
+    out = res.outcomes["fp_con"]
+    assert out.status != "ERROR", out.error
+    assert "partition_verdicts" in json.loads(out.payload)
+    assert _n_persistent_rdds(spark) == before
+
+
+def test_plan_leaves_no_cache_entry(engine, spark):
+    """``plan`` only explains: the joined-profile persist the verdict
+    compiler registers must not outlive it in Spark's CacheManager."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
+    plans = engine.plan(DataPactConfig(validations=[_fingerprint_constraint_task()]))
+    assert "Per-partition verdict plan" in plans["fp_con"]
+    assert cache_manager.isEmpty()
 
 
 def test_violation_materialization(engine, spark):

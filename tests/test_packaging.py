@@ -69,3 +69,25 @@ def test_spark_submit_pyfiles(tmp_path, sf_dir):
     result_lines = [l for l in out.stdout.splitlines() if l.startswith("PKG_RESULT=")]
     assert result_lines, out.stdout[-2000:]
     assert '"pkg_check": "SUCCESS"' in result_lines[0]
+
+
+# the hand-carried per-DataFrame cache handle that session.persist /
+# cache_scope replaced; a derived frame (select/where/orderBy) silently
+# dropped it, which leaked or crashed every time
+RETIRED_CACHE_PROTOCOL = ("_datapact_cached", "track_cached", "propagate_cached")
+
+
+def test_retired_cache_handle_protocol_stays_gone():
+    sources = [os.path.join(REPO, "__spark_entry__.py")]
+    for root, _dirs, files in os.walk(os.path.join(REPO, "datapact_spark")):
+        sources += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    hits = []
+    for path in sources:
+        with open(path, encoding="utf-8") as fh:
+            for n, line in enumerate(fh, 1):
+                hits += [
+                    f"{os.path.relpath(path, REPO)}:{n}: {name}"
+                    for name in RETIRED_CACHE_PROTOCOL
+                    if name in line
+                ]
+    assert not hits, "\n".join(hits)

@@ -232,7 +232,7 @@ def test_corpus_pipeline_through_runner_matches_oracle_pins(spark, tmp_path):
             pack_sequences(df, context_len=128, shards=4), context_len=128)),
     ]
     runner = PipelineRunner(spark, str(tmp_path))
-    out, results = runner.run("corpus", 1, raw, stages)
+    _, results = runner.run("corpus", 1, raw, stages)
 
     def pin(df, key):
         r = df.agg(
@@ -258,7 +258,31 @@ def test_corpus_pipeline_through_runner_matches_oracle_pins(spark, tmp_path):
         stage_dfs["sequences"],
         F.concat_ws(":", F.col("shard").cast("string"), F.col("seq_in_shard")),
     ) == oracle_rows["6_sequences"]
-    release_cached(out)
+    # the oracle query ran outside any cache scope: drop its persists
+    release_cached()
+
+
+def test_strip_boilerplate_stage_releases_its_persist(spark, docs, tmp_path):
+    """build_stages wraps strip_boilerplate in where().select(), a new
+    frame object; the boiler hash-set persist must still be released
+    once the stage is written — the persistent-RDD census is unchanged."""
+    from datapact_spark.config import PipelineSpec
+    from datapact_spark.pipeline import build_stages
+
+    spec = PipelineSpec(
+        pipeline_key="strip", source="documents",
+        stages=[{"kind": "strip_boilerplate", "min_docs": 3}],
+    )
+
+    def census() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = census()
+    _, results = PipelineRunner(spark, str(tmp_path)).run(
+        "strip", 1, docs, build_stages(spec)
+    )
+    assert results[0].rows > 0
+    assert census() == before
 
 
 class TestDeclarativePipelines:
