@@ -354,9 +354,9 @@ def main(argv: list[str] | None = None) -> int:
                     f"({r.seconds:.2f}s) -> {r.path}"
                 )
         if lineage:
-            from datapact_spark.ledger import LEDGER_SCHEMA
+            from datapact_spark.ledger import local_frame
 
-            ledger.append(spark.createDataFrame(lineage, LEDGER_SCHEMA))
+            ledger.append(local_frame(spark, lineage))
         print(f"pipeline run_id={run_id} complete")
         return 0
 

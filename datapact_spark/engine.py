@@ -2,12 +2,24 @@
 
 The reference builds a Databricks Jobs DAG — N independent SQL tasks in
 parallel, then an aggregate gate (job_orchestrator.py:34-64). Here the
-same shape runs inside one SparkSession: a thread pool submits each
-task's plan concurrently (FAIR scheduler pools share executors across
-tasks), each task resolves to a single 1-row collect, the driver
-appends all ledger rows in one write, then the run-level aggregation
-computes the exec summaries and raises on failure (the RAISE_ERROR
-gate, validation.sql.j2:493 / aggregate_results.sql.j2:223-228).
+same shape runs inside one SparkSession:
+
+* a thread pool runs up to ``max_parallel_tasks`` tasks at once, each in
+  its own FAIR scheduler pool and ``cache_scope``;
+* a task compiles to plans, then submits its independent actions (the
+  sinks) together: the 1-row verdict collect, each violation write, each
+  drift-baseline bootstrap and, for ``partition_by`` tasks, the
+  checkpointed per-partition verdicts with their summary reads. Each sink
+  runs on its own thread, inheriting the task's pool and job
+  description, so the task's small jobs overlap instead of queueing;
+* every job is described ``datapact:<run_id>:<task_key>[:<sink>]``, and
+  the run tail ``datapact:<run_id>:ledger``;
+* the tail builds the ledger rows as one JVM local relation (no Python
+  worker), appends it, and derives the four exec tables from that same
+  frame, written concurrently — the aggregate step of
+  aggregate_results.sql.j2 without re-reading the ledger;
+* ``raise_on_failure`` is the RAISE_ERROR gate (validation.sql.j2:493 /
+  aggregate_results.sql.j2:223-228).
 """
 
 from __future__ import annotations
@@ -16,20 +28,26 @@ import datetime as dt
 import json
 import logging
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Any
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from datapact_spark import aggregate as agg
 from datapact_spark.config import DataPactConfig, ValidationTask
-from datapact_spark.ledger import LEDGER_SCHEMA, ResultsLedger
-from datapact_spark.plans.compiler import compile_task
+from datapact_spark.ledger import ResultsLedger, local_frame
+from datapact_spark.plans.compiler import CompiledTask, compile_task
 from datapact_spark.session import cache_scope
 from datapact_spark.sources.loader import TableResolver
 
 log = logging.getLogger("datapact_spark")
+
+JOB_DESCRIPTION = "spark.job.description"
 
 
 class DataPactValidationError(RuntimeError):
@@ -129,49 +147,25 @@ class DataPactEngine:
         # persists is released when it finishes, and never a sibling's
         @cache_scope()
         def _run_one(task: ValidationTask) -> tuple[TaskOutcome, Row | None]:
-            # FAIR-pool isolation per task; local properties are
-            # thread-confined so this tags only this task's jobs.
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"datapact_{task.task_key}"
-            )
+            # FAIR-pool isolation and a job description per task; local
+            # properties are thread-confined, so they tag only this task's
+            # jobs (and, inherited, those of its sinks)
+            sc = self.spark.sparkContext
+            sc.setLocalProperty("spark.scheduler.pool", f"datapact_{task.task_key}")
+            sc.setJobDescription(f"datapact:{run_id}:{task.task_key}")
             t0 = time.monotonic()
             try:
                 self._log_colocation(task)
                 compiled = compile_task(
                     self.spark, task, self.resolver, baseline_store=self.baselines
                 )
-                row = compiled.ledger_row(
-                    run_id, run_id, job_name, job_start_ts
-                ).collect()[0]
-                for kind, vdf in compiled.violation_dfs.items():
-                    self.ledger.write_violations(run_id, task.task_key, kind, vdf)
-                for dcheck, src_df in compiled.bootstrap_drift:
-                    from datapact_spark.operators.drift import histogram_snapshot
-                    from datapact_spark.operators.quantiles import (
-                        kll_sketch,
-                        tdigest_sketch,
-                    )
-
-                    if dcheck.kind == "categorical":
-                        from datapact_spark.operators.drift import (
-                            categorical_snapshot,
-                        )
-
-                        snap = categorical_snapshot(
-                            src_df, dcheck.column, dcheck.bins
-                        )
-                    elif dcheck.sketch == "tdigest":
-                        snap = tdigest_sketch(src_df, dcheck.column, dcheck.delta)
-                    elif dcheck.sketch == "kll":
-                        snap = kll_sketch(src_df, dcheck.column, dcheck.bins)
-                    else:
-                        snap = histogram_snapshot(src_df, dcheck.column, dcheck.bins)
-                    self.baselines.write(task.task_key, dcheck.column, snap)
-                if task.partition_by:
-                    # north-star mode: per-partition verdicts computed,
-                    # checkpointed, and folded into the task payload +
-                    # status (any failing group fails the task)
-                    row = self._augment_with_partition_verdicts(task, run_id, row)
+                done = self._concurrently(
+                    self._task_sinks(task, compiled, run_id, job_name, job_start_ts)
+                )
+                row = done["verdict"]
+                if done.get("partitions") is not None:
+                    # north-star mode: any failing group fails the task
+                    row = _fold_partition_summary(row, done["partitions"])
                 outcome = TaskOutcome(
                     task_key=task.task_key,
                     status=row["status"],
@@ -200,9 +194,17 @@ class DataPactEngine:
                     rows.append(row)
 
         if rows:
-            ledger_df = self.spark.createDataFrame(rows, LEDGER_SCHEMA)
-            self.ledger.append(ledger_df)
-            self._refresh_exec_tables(run_id)
+            sc = self.spark.sparkContext
+            caller_description = sc.getLocalProperty(JOB_DESCRIPTION)
+            sc.setJobDescription(f"datapact:{run_id}:ledger")
+            try:
+                ledger_df = local_frame(self.spark, rows)
+                self.ledger.append(ledger_df)
+                # the dynamic overwrite makes ledger_df exactly the run's
+                # partition: derive the exec tables from it, no re-read
+                self._refresh_exec_tables(ledger_df, run_id)
+            finally:
+                sc.setJobDescription(caller_description)
 
         if raise_on_failure and not result.passed:
             raise DataPactValidationError(
@@ -241,12 +243,81 @@ class DataPactEngine:
             )
         return coloc
 
-    def _augment_with_partition_verdicts(
-        self, task: ValidationTask, run_id: int, row: Row
-    ) -> Row:
-        """Run per-partition verdicts for a partition_by task and fold a
-        summary (group counts + up-to-10 failing group keys) into the
-        task's payload; any failing group fails the task."""
+    def _concurrently(self, actions: dict[str, Callable[[], Any]]) -> dict[str, Any]:
+        """Run independent Spark actions at once; return their results by
+        name. Each runs in its own ``cache_scope`` on a thread that
+        inherits this thread's local properties (FAIR pool, job
+        description) and appends ``:<name>`` to the description. Waits
+        for all of them, then re-raises the first failure in ``actions``
+        order."""
+        description = self.spark.sparkContext.getLocalProperty(JOB_DESCRIPTION)
+
+        def bind(name: str, action: Callable[[], Any]) -> Callable[[], Any]:
+            # wrapping captures this thread's properties; one capture per
+            # action, so sibling descriptions never share a Properties
+            @inheritable_thread_target(self.spark)
+            def run() -> Any:
+                self.spark.sparkContext.setJobDescription(f"{description}:{name}")
+                with cache_scope():
+                    return action()
+
+            return run
+
+        with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+            futures = {name: pool.submit(bind(name, a)) for name, a in actions.items()}
+        return {name: f.result() for name, f in futures.items()}
+
+    def _task_sinks(
+        self, task: ValidationTask, compiled: CompiledTask, run_id: int,
+        job_name: str, job_start_ts: dt.datetime,
+    ) -> dict[str, Callable[[], Any]]:
+        """The compiled task's independent actions: the verdict-row
+        collect, each violation write, each baseline bootstrap and, for a
+        ``partition_by`` task, the per-partition verdicts."""
+        ledger_row = compiled.ledger_row(run_id, run_id, job_name, job_start_ts)
+        sinks: dict[str, Callable[[], Any]] = {
+            "verdict": lambda: ledger_row.collect()[0]
+        }
+        for kind, vdf in compiled.violation_dfs.items():
+            sinks[f"violations/{kind}"] = partial(
+                self.ledger.write_violations, run_id, task.task_key, kind, vdf
+            )
+        # checks on one column share its baseline directory: write them
+        # in order on one thread (the last one wins, as it always has)
+        by_column: dict[str, list] = {}
+        for dcheck, src_df in compiled.bootstrap_drift:
+            by_column.setdefault(dcheck.column, []).append((dcheck, src_df))
+        for column, checks in by_column.items():
+            sinks[f"baseline/{column}"] = partial(
+                self._bootstrap_baselines, task.task_key, checks
+            )
+        if task.partition_by:
+            sinks["partitions"] = partial(self._partition_summary, task, run_id)
+        return sinks
+
+    def _bootstrap_baselines(self, task_key: str, checks: list) -> None:
+        from datapact_spark.operators.drift import (
+            categorical_snapshot,
+            histogram_snapshot,
+        )
+        from datapact_spark.operators.quantiles import kll_sketch, tdigest_sketch
+
+        for dcheck, src_df in checks:
+            if dcheck.kind == "categorical":
+                snap = categorical_snapshot(src_df, dcheck.column, dcheck.bins)
+            elif dcheck.sketch == "tdigest":
+                snap = tdigest_sketch(src_df, dcheck.column, dcheck.delta)
+            elif dcheck.sketch == "kll":
+                snap = kll_sketch(src_df, dcheck.column, dcheck.bins)
+            else:
+                snap = histogram_snapshot(src_df, dcheck.column, dcheck.bins)
+            self.baselines.write(task_key, dcheck.column, snap)
+
+    def _partition_summary(self, task: ValidationTask, run_id: int) -> dict | None:
+        """Run per-partition verdicts for a partition_by task and summarize
+        them: group counts plus up to 10 failing group keys. None when
+        the task has no groupable checks (e.g. custom-SQL only) — its
+        task verdict then stands alone."""
         try:
             verdicts = self.run_partitioned(
                 task,
@@ -255,9 +326,7 @@ class DataPactEngine:
                 salt_buckets=task.partition_salt_buckets,
             )
         except ValueError:
-            # no groupable checks configured (e.g. custom-SQL only) —
-            # the task verdict stands alone
-            return row
+            return None
         group_cols = task.partition_by or []
         summary = verdicts.agg(
             F.count(F.lit(1)).alias("total"),
@@ -276,19 +345,13 @@ class DataPactEngine:
             .limit(10)
             .collect()
         ]
-        payload = json.loads(row["result_payload"])
-        payload["partition_verdicts"] = {
+        return {
             "partition_by": group_cols,
             "total_groups": summary["total"],
             "failed_groups": summary["failed"],
             "sample_failed_keys": failed_keys,
             "status": "PASS" if summary["failed"] == 0 else "FAIL",
         }
-        d = row.asDict()
-        d["result_payload"] = json.dumps(payload)
-        if summary["failed"] > 0:
-            d["status"] = "FAILURE"
-        return Row(**d)
 
     # ------------------------------------------- per-partition verdicts
     @cache_scope()
@@ -354,15 +417,25 @@ class DataPactEngine:
                 store.finalize_batch(task.task_key, run_id, b, verdicts.schema)
         return store.read_verdicts(task.task_key, run_id)
 
-    def _refresh_exec_tables(self, run_id: int) -> None:
-        run_rows = self.ledger.run_results(run_id)
-        self.ledger.write_exec_table("exec_run_summary", agg.run_summary(run_rows), run_id)
-        self.ledger.write_exec_table(
-            "exec_domain_breakdown", agg.domain_breakdown(run_rows), run_id
-        )
-        self.ledger.write_exec_table(
-            "exec_owner_breakdown", agg.owner_breakdown(run_rows), run_id
-        )
-        self.ledger.write_exec_table(
-            "exec_priority_breakdown", agg.priority_breakdown(run_rows), run_id
-        )
+    def _refresh_exec_tables(self, run_rows: DataFrame, run_id: int) -> None:
+        self._concurrently({
+            name: partial(self.ledger.write_exec_table, name, build(run_rows), run_id)
+            for name, build in (
+                ("exec_run_summary", agg.run_summary),
+                ("exec_domain_breakdown", agg.domain_breakdown),
+                ("exec_owner_breakdown", agg.owner_breakdown),
+                ("exec_priority_breakdown", agg.priority_breakdown),
+            )
+        })
+
+
+def _fold_partition_summary(row: Row, summary: dict) -> Row:
+    """The task's ledger row with the partition summary in its payload;
+    any failing group fails the task."""
+    payload = json.loads(row["result_payload"])
+    payload["partition_verdicts"] = summary
+    d = row.asDict()
+    d["result_payload"] = json.dumps(payload)
+    if summary["failed_groups"] > 0:
+        d["status"] = "FAILURE"
+    return Row(**d)

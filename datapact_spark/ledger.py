@@ -13,6 +13,10 @@ the sandbox there's no transactional table format, so:
   completed unit — the manifest IS the source of truth, so a killed run
   resumes by anti-joining the work list against it.
 
+Driver-side rows (ledger rows, pipeline lineage, empty schema-bearing
+frames) become DataFrames through one helper, ``local_frame``: a JVM
+local relation shipped as Arrow, so no Python worker starts for them.
+
 On a real cluster, swap the writes for Delta/Iceberg ``MERGE``/
 ``replaceWhere`` — the engine code above this layer is unchanged.
 """
@@ -23,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LEDGER_SCHEMA = (
     "task_key string, status string, run_id long, job_id long, job_name string, "
@@ -33,6 +38,28 @@ LEDGER_SCHEMA = (
     "business_priority string, expected_sla_hours double, "
     "estimated_impact_usd double, result_payload string"
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str = LEDGER_SCHEMA
+) -> DataFrame:
+    """Driver-side ``rows`` as a DataFrame that plans as a
+    ``LocalTableScan``. Rows convert exactly as
+    ``spark.createDataFrame(rows, schema)`` converts them (dicts match
+    fields by name, tuples and Rows by position, naive timestamps are
+    local time), but they reach the JVM as one Arrow table instead of a
+    pickled PythonRDD, so no Python worker starts."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    # toInternal: the same conversion createDataFrame applies; timestamps
+    # become epoch microseconds, which the UTC Arrow type takes as is
+    internal = [schema.toInternal(r) for r in rows]
+    columns = [pa.array([t[i] for t in internal], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
 class ResultsLedger:
@@ -58,7 +85,7 @@ class ResultsLedger:
 
     def read(self) -> DataFrame:
         if not os.path.exists(self.history_path):
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+            return local_frame(self.spark, [])
         df = self.spark.read.parquet(self.history_path)
         # partition column comes back typed; normalize to long
         return df.withColumn("run_id", F.col("run_id").cast("long"))
@@ -387,7 +414,7 @@ class CheckpointStore:
             f.endswith(".parquet") for f in os.listdir(d)
         )
         if not has_data:
-            self.spark.createDataFrame([], schema).write.mode("overwrite").parquet(d)
+            local_frame(self.spark, [], schema).write.mode("overwrite").parquet(d)
         open(os.path.join(d, "_SUCCESS"), "a").close()
 
     def read_verdicts(self, task_key: str, run_id: int) -> DataFrame:

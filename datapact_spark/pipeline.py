@@ -165,11 +165,11 @@ class PipelineRunner:
 
     def _append_lineage(self, ledger, key: str, run_id: int,
                         job_name: str, results: list[StageResult]) -> None:
-        from datapact_spark.ledger import LEDGER_SCHEMA
+        from datapact_spark.ledger import local_frame
 
         rows = self.lineage_rows(key, run_id, job_name, results)
         if rows:
-            ledger.append(self.spark.createDataFrame(rows, LEDGER_SCHEMA))
+            ledger.append(local_frame(self.spark, rows))
 
 
 def build_stages(spec) -> list[Stage]:

@@ -96,7 +96,7 @@ def validate_stream(
     ``foreachBatch``; the ``target`` resolves through ``resolver`` as
     usual (a static reference table). Returns the StreamingQuery.
     """
-    from datapact_spark.ledger import ResultsLedger
+    from datapact_spark.ledger import ResultsLedger, local_frame
 
     # per-stream ledger subdirectory: micro-batch run_ids are batch ids,
     # which collide across different streaming tasks — and the ledger's
@@ -119,7 +119,7 @@ def validate_stream(
             job_start_ts=dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
         )
         rows = row_df.collect()
-        ledger.append(spark.createDataFrame(rows, row_df.schema))
+        ledger.append(local_frame(spark, rows, row_df.schema))
         if on_batch is not None:
             r = rows[0]
             on_batch(batch_id, r["status"], r["status"] == "SUCCESS")
@@ -209,7 +209,16 @@ def streaming_near_dedup(
 
     Exactly-once note: foreachBatch sinks are parquet APPENDS keyed by
     batch_id directories, so a replayed batch overwrites its own
-    directory idempotently (the engine's ledger convention)."""
+    directory idempotently (the engine's ledger convention).
+
+    Upgrade note: index increments once went under a bare
+    ``ingest=<batch_id>`` key; they now go under
+    ``ingest=<checkpoint tag>_<batch_id>``. A stream resumed from a
+    checkpoint written before that change re-appends its replayed batch
+    under the new key, beside the bare one, so that batch's band rows
+    appear twice in the index. Drain such a stream (let it commit every
+    pending batch) before upgrading, or rebuild its index with
+    ``MinHashIndexStore.write`` afterwards."""
     import os
 
     from pyspark.sql import functions as F

@@ -6,6 +6,7 @@ storage for the rest of the session (the r4 ``dup_clusters`` leak class).
 """
 
 import json
+import os
 import threading
 
 import pytest
@@ -131,8 +132,9 @@ def test_no_other_active_query_pins_storage(spark):
 def test_engine_partitioned_run_pins_nothing(spark, tmp_path):
     """Engine-run census: a partitioned fingerprint task with a folded
     constraint persists its joined profile; run concurrently with a
-    join-mode sibling on the engine's pool, each task's scope must
-    release its own persists, and both must complete their verdicts."""
+    join-mode sibling and a sibling that materializes its violations on
+    the engine's pool, each task's scope must release its own persists
+    (and its sinks' theirs), and all must complete their verdicts."""
     from datapact_spark.config import ConstraintCheck, DataPactConfig, ValidationTask
     from datapact_spark.engine import DataPactEngine
     from datapact_spark.sources.codegen import corrupt_code_table, synthesize_code_table
@@ -157,12 +159,17 @@ def test_engine_partitioned_run_pins_nothing(spark, tmp_path):
     sibling = task.model_copy(
         update={"task_key": "census_join", "row_hash_mode": "join"}
     )
+    # violation writes run as concurrent sinks on their own threads
+    violations = sibling.model_copy(
+        update={"task_key": "census_viol", "materialize_violations": True}
+    )
     before = _n_cached_rdds(spark)
     res = engine.run(
-        DataPactConfig(validations=[task, sibling]),
+        DataPactConfig(validations=[task, sibling, violations]),
         job_name="census", run_id=3, max_parallel=2,
     )
-    for key in ("census", "census_join"):
+    assert os.listdir(tmp_path / "res" / "violations" / "run_id=3" / "census_viol")
+    for key in ("census", "census_join", "census_viol"):
         assert res.outcomes[key].status == "FAILURE", res.outcomes[key].error
         assert "partition_verdicts" in json.loads(res.outcomes[key].payload)
     assert _n_cached_rdds(spark) <= before

@@ -147,3 +147,98 @@ def test_no_checks_vacuous_pass(engine):
     assert result.passed
     payload = json.loads(result.outcomes["noop"].payload)
     assert "No validations configured" in payload["message"]
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """``ledger.local_frame`` converts rows exactly as
+    ``createDataFrame(rows, LEDGER_SCHEMA)`` does — Rows and tuples by
+    position, dicts by name, naive timestamps as local time — and plans
+    as a ``LocalTableScan`` instead of a pickled ``Scan ExistingRDD``."""
+    import datetime as dt
+    import time
+
+    from pyspark.sql import Row
+
+    from datapact_spark.ledger import LEDGER_SCHEMA, local_frame
+
+    ts = dt.datetime(2026, 3, 29, 1, 30, 5, 123456)
+    old_end = dt.datetime(1999, 12, 31, 23, 59, 59, 999999)
+    full = (
+        "k", "SUCCESS", 2**50, 7, "j", ts, ts, old_end, None, "s", "t", None,
+        None, "x", "Sales", "o", "CRITICAL", 1.25, float("nan"), '{"a": "é"}',
+    )
+    names = [f.name for f in spark.createDataFrame([], LEDGER_SCHEMA).schema]
+    rows = [
+        Row(**dict(zip(names, full))),
+        tuple([None] * len(names)),
+        {"task_key": "dict", "run_id": 3, "validation_begin_ts": ts},
+    ]
+    stamps = ["job_start_ts", "validation_begin_ts", "validation_complete_ts"]
+    tz_before = os.environ.get("TZ")
+    try:
+        for tz in ("UTC", "America/New_York"):
+            os.environ["TZ"] = tz
+            time.tzset()
+            new = local_frame(spark, rows)
+            old = spark.createDataFrame(rows, LEDGER_SCHEMA)
+            plan = new._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+            assert new.schema == old.schema
+            got, want = new.collect(), old.collect()
+            for g, w in zip(got, want, strict=True):
+                for c in names:
+                    assert str(g[c]) == str(w[c]), (tz, c)
+            micros = [F.unix_micros(c).alias(c) for c in stamps]
+            assert new.select(*micros).collect() == old.select(*micros).collect()
+    finally:
+        if tz_before is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = tz_before
+        time.tzset()
+    assert local_frame(spark, []).count() == 0
+
+
+def test_engine_ledger_frame_is_local_relation(engine, spark, monkeypatch):
+    """The frame ``engine.run`` appends is a local relation built from
+    the verdict rows, equal, column for column, to what
+    ``createDataFrame(rows, LEDGER_SCHEMA)`` gave for the same rows."""
+    import datapact_spark.engine as engine_mod
+    from datapact_spark.ledger import LEDGER_SCHEMA, ResultsLedger
+
+    captured = {}
+    build = engine_mod.local_frame
+
+    def record_rows(spark_, rows, *args):
+        captured["rows"] = list(rows)
+        return build(spark_, rows, *args)
+
+    append = ResultsLedger.append
+
+    def record_frame(self, df):
+        captured["plan"] = df._jdf.queryExecution().executedPlan().toString()
+        captured["df"] = df
+        append(self, df)
+
+    monkeypatch.setattr(engine_mod, "local_frame", record_rows, raising=False)
+    monkeypatch.setattr(ResultsLedger, "append", record_frame)
+    config = DataPactConfig(
+        validations=[
+            ValidationTask(task_key="same", source="orders", target="orders",
+                           count_tolerance=0.0, business_domain="Sales"),
+            ValidationTask(task_key="fewer", source="orders", target="orders_sample",
+                           count_tolerance=0.0),
+        ]
+    )
+    engine.run(config, job_name="local", run_id=778)
+    assert "LocalTableScan" in captured["plan"]
+    assert "ExistingRDD" not in captured["plan"]
+    old = spark.createDataFrame(captured["rows"], LEDGER_SCHEMA).collect()
+    new = captured["df"].collect()
+    assert [r.asDict() for r in new] == [r.asDict() for r in old]
+    for r in new:
+        for c in ("job_start_ts", "validation_begin_ts", "validation_complete_ts"):
+            assert r[c] is not None
+    # the exec tables derive from the same rows
+    summary = engine.ledger.read_exec_table("exec_run_summary").collect()[0]
+    assert (summary["total_tasks"], summary["failed_task_keys"]) == (2, ["fewer"])

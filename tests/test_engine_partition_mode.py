@@ -181,3 +181,129 @@ def test_genie_tables(engine, spark):
     issues = agg.genie_issues(ledger).collect()
     assert issues and all(i["task_key"] == "g1" for i in issues)
     assert any(i["check_type"] == "row_hash" for i in issues)
+
+
+def _violation_task(task_key: str = "viol", **extra) -> ValidationTask:
+    return ValidationTask(**{
+        "task_key": task_key, "source": "code_src", "target": "code_tgt",
+        "primary_keys": ["repo", "path"], "pk_row_hash_check": True,
+        "hash_columns": ["content"], "hash_algo": "sha256",
+        "uniqueness_columns": ["repo", "path"], "uniqueness_tolerance": 0.0,
+        "materialize_violations": True, **extra,
+    })
+
+
+def test_sinks_run_on_their_own_threads_with_task_tags(engine, spark, monkeypatch):
+    """A task's violation writes run on threads other than the task
+    thread; each inherits the task's FAIR pool and tags its jobs with
+    its own description. The run tail is tagged ``:ledger``, and the
+    caller's description is left as it was."""
+    import threading
+
+    import datapact_spark.engine as engine_mod
+    from datapact_spark.ledger import ResultsLedger
+
+    sc = spark.sparkContext
+    seen: list[tuple[str, int, str, str]] = []
+    task_threads: set[int] = set()
+
+    def record(name):
+        seen.append((
+            name, threading.get_ident(),
+            sc.getLocalProperty("spark.scheduler.pool"),
+            sc.getLocalProperty("spark.job.description"),
+        ))
+
+    compile_task = engine_mod.compile_task
+
+    def compile_on_task_thread(*args, **kwargs):
+        task_threads.add(threading.get_ident())
+        return compile_task(*args, **kwargs)
+
+    write_violations = ResultsLedger.write_violations
+
+    def recorded_violations(self, run_id, task_key, kind, df):
+        record(f"violations/{kind}")
+        write_violations(self, run_id, task_key, kind, df)
+
+    write_exec_table = ResultsLedger.write_exec_table
+
+    def recorded_exec_table(self, name, df, run_id):
+        record(name)
+        write_exec_table(self, name, df, run_id)
+
+    append = ResultsLedger.append
+
+    def recorded_append(self, df):
+        record("append")
+        append(self, df)
+
+    monkeypatch.setattr(engine_mod, "compile_task", compile_on_task_thread)
+    monkeypatch.setattr(ResultsLedger, "write_violations", recorded_violations)
+    monkeypatch.setattr(ResultsLedger, "write_exec_table", recorded_exec_table)
+    monkeypatch.setattr(ResultsLedger, "append", recorded_append)
+    sc.setJobDescription("caller")
+    try:
+        res = engine.run(
+            DataPactConfig(validations=[_violation_task()]), job_name="t", run_id=78
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert res.outcomes["viol"].status == "FAILURE", res.outcomes["viol"].error
+
+    writes = [s for s in seen if s[0].startswith("violations/")]
+    assert {w[0] for w in writes} == {
+        "violations/row_hash", "violations/uniqueness_source",
+        "violations/uniqueness_target",
+    }
+    assert len(task_threads) == 1
+    for name, thread, pool, description in writes:
+        assert thread not in task_threads
+        assert pool == "datapact_viol"
+        assert description == f"datapact:78:viol:{name}"
+    assert len({w[1] for w in writes}) == len(writes)
+
+    tail = {name: description for name, _, _, description in seen
+            if not name.startswith("violations/")}
+    assert tail.pop("append") == "datapact:78:ledger"
+    assert tail == {
+        name: f"datapact:78:ledger:{name}"
+        for name in ("exec_run_summary", "exec_domain_breakdown",
+                     "exec_owner_breakdown", "exec_priority_breakdown")
+    }
+
+
+def test_failing_sink_errors_its_task_only(engine, spark, monkeypatch):
+    """A sink that raises leaves its task in ERROR with that error; the
+    sibling's outcome is what it is without the failure, the other sinks
+    still finish, and nothing stays in Spark's CacheManager."""
+    from datapact_spark.ledger import ResultsLedger
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    cfg = DataPactConfig(validations=[
+        _violation_task(partition_by=["repo", "lang"]),
+        _violation_task("sibling", materialize_violations=False),
+    ])
+    baseline = engine.run(cfg, job_name="ok", run_id=80).outcomes["sibling"]
+
+    write_violations = ResultsLedger.write_violations
+
+    def failing(self, run_id, task_key, kind, df):
+        if kind == "uniqueness_source":
+            raise RuntimeError("violation sink down")
+        write_violations(self, run_id, task_key, kind, df)
+
+    monkeypatch.setattr(ResultsLedger, "write_violations", failing)
+    spark.catalog.clearCache()
+    res = engine.run(cfg, job_name="broken", run_id=81)
+    broken = res.outcomes["viol"]
+    assert broken.status == "ERROR"
+    assert broken.error == "violation sink down"
+    sibling = res.outcomes["sibling"]
+    assert (sibling.status, sibling.payload) == (baseline.status, baseline.payload)
+    done = os.path.join(engine.ledger.path, "violations", "run_id=81", "viol")
+    assert sorted(os.listdir(done)) == ["row_hash", "uniqueness_target"]
+    assert cache_manager.isEmpty()
+    # only the sibling reaches the ledger
+    assert [r["task_key"] for r in engine.ledger.run_results(81).collect()] == ["sibling"]

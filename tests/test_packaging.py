@@ -91,3 +91,20 @@ def test_retired_cache_handle_protocol_stays_gone():
                     if name in line
                 ]
     assert not hits, "\n".join(hits)
+
+
+def test_ledger_rows_go_through_local_frame():
+    """Driver-side ledger rows become a frame through
+    ``ledger.local_frame`` (a JVM local relation): ``createDataFrame``
+    on a Python list pickles them through a PythonRDD and starts Python
+    workers."""
+    hits = []
+    for name in ("engine.py", "pipeline.py", "cli.py"):
+        path = os.path.join(REPO, "datapact_spark", name)
+        with open(path, encoding="utf-8") as fh:
+            hits += [
+                f"datapact_spark/{name}:{n}"
+                for n, line in enumerate(fh, 1)
+                if "createDataFrame(" in line
+            ]
+    assert not hits, "\n".join(hits)
